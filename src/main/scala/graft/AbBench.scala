@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Interleaved A/B measurement of one registered query under two runtime
   * conf settings — the matched-window discipline the sandbox host forces
@@ -24,21 +23,7 @@ object AbBench {
     val confB = parse(args(2))
     val confA = if (args.length > 3) parse(args(3)) else Seq.empty
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.shuffle.compress", "false")
-      .config("spark.shuffle.spill.compress", "false")
-    // the Bench's ad-hoc conf hook — without it arm A silently diverges
-    // from the bench baseline whenever SPARK_GRAFT_CONF is in use
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.contains("="))
-      .foreach { kv => val Array(k, v) = kv.split("=", 2); builder.config(k, v) })
-    val spark = builder.getOrCreate()
+    val spark = Sessions.builder(Sessions.envCores).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // defaults to restore for arm A (read BEFORE any arm-B override)
     val defaults = (confA ++ confB).map(_._1).distinct

@@ -12,22 +12,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // single-node tuning: Kryo cuts task/closure serialization; shuffle
-      // compression is pure CPU overhead when there is no network hop (a
-      // real cluster keeps compression ON — this is local-mode-only).
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.shuffle.compress", "false")
-      .config("spark.shuffle.spill.compress", "false")
-    // ad-hoc conf experiments: SPARK_GRAFT_CONF="k=v;k=v"
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.contains("="))
-      .foreach { kv => val Array(k, v) = kv.split("=", 2); builder.config(k, v) })
+    val builder = Sessions.builder(Sessions.envCores)
     // SPARK_GRAFT_FRESH=1: fresh-session-per-query mode. The default
     // suite shares one session across all 175 queries, and multi-second
     // queries late in the order have measured up to ~1.5× above their
@@ -72,7 +57,9 @@ object Bench {
     // rounds of single-rep driver artifacts were pure noise). The median
     // is computed over SUCCESSFUL reps only: a throwing rep fast-fails and
     // would otherwise deflate the headline total. A query whose every rep
-    // fails is listed in `failed` and excluded from `total`.
+    // fails is listed in `failed` and excluded from `total`; so is a
+    // throwing stream/ingest/scale-up probe, as `probe:<name>` (its
+    // figures then read 0).
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
     val failed = scala.collection.mutable.ArrayBuffer.empty[String]
     val partialFailed = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -244,7 +231,6 @@ object Bench {
       else Some(name -> good.sorted.apply((good.size - 1) / 2))
     }
     val total = if (results.nonEmpty) results.values.sum else 0.0
-    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val partialJson = partialFailed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val sentSorted = sentinelTimes.sorted
     val sentMed = if (sentSorted.nonEmpty) sentSorted((sentSorted.size - 1) / 2) else 0.0
@@ -254,6 +240,10 @@ object Bench {
     val sentP90 = if (sentSorted.nonEmpty)
       sentSorted(math.max(0, math.ceil(sentSorted.size * 0.9).toInt - 1)) else 0.0
     val sentDisp = if (sentMed > 0) sentP90 / sentMed else 0.0
+    def probeFailed(probe: String, e: Throwable): Unit = {
+      failed += s"probe:$probe"
+      System.err.println(s"[bench] probe:$probe failed: $e")
+    }
 
     // ---- per-query floor: the fixed cost every measured query pays that
     // amortizes away at scale. floor_noop = job submit + noop commit on an
@@ -299,8 +289,8 @@ object Bench {
       (if (dt > 0) streamN / dt else 0.0, dt)
     }
     val (streamRate, streamSec, routedRate) = {
-      // the temp log is released in a finally: a throw mid-probe (swallowed
-      // into the zeroed metrics) must not leak the file on every invocation
+      // the temp log is released in a finally: a throw mid-probe (listed
+      // as failed, metrics zeroed) must not leak the file on every invocation
       val log = java.nio.file.Files.createTempFile("graft-bench-replay", ".jsonl")
       try {
         val w = java.nio.file.Files.newBufferedWriter(log)
@@ -320,7 +310,7 @@ object Bench {
           .transform(graft.cdc.ops.Route.flashGate)
         val (routed, _) = streamRun(route, log)
         (raw, rawSec, routed)
-      } catch { case _: Throwable => (0.0, 0.0, 0.0) }
+      } catch { case e: Throwable => probeFailed("stream", e); (0.0, 0.0, 0.0) }
       finally java.nio.file.Files.deleteIfExists(log)
     }
 
@@ -356,7 +346,7 @@ object Bench {
           s"$root/out", s"$root/ckp").awaitTermination()
         val dt = (System.nanoTime() - t0) / 1e9
         (if (dt > 0) nDocs / dt else 0.0, nDocs, dt / ingestBatches)
-      } catch { case _: Throwable => (0.0, 0L, 0.0) }
+      } catch { case e: Throwable => probeFailed("ingest", e); (0.0, 0L, 0.0) }
       // finally, not just the success path: a failed ingest probe must not
       // leave half the documents corpus re-parqueted in /tmp every run
       finally org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
@@ -385,11 +375,13 @@ object Bench {
         t(out) // warm the scaled path once
         ((1 to 3).map(_ => t(sfDir)).sorted.apply(1),
           (1 to 3).map(_ => t(out)).sorted.apply(1))
-      } catch { case _: Throwable => (0.0, 0.0) }
+      } catch { case e: Throwable => probeFailed("scaleup", e); (0.0, 0.0) }
       // the 5x fact replica is multi-GB at sf0.1 — never leave it in /tmp
       finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
     }
     val scaleRatio = if (scaleBase > 0) scaleScaled / scaleBase else 0.0
+    // after the probes, which may add to `failed`
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
 
     // ---- noisy-run detection: a sentinel dispersion past this bound
     // means the whole window was ambient-load-inflated (round 12's driver

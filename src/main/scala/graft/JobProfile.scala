@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler._
 import scala.collection.mutable
 
@@ -19,20 +18,7 @@ object JobProfile {
     val name = args(0)
     val reps = if (args.length > 1) args(1).toInt else 3
     val sfDir = if (args.length > 2) args(2) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.shuffle.compress", "false")
-      .config("spark.shuffle.spill.compress", "false")
-    // the Bench's ad-hoc conf hook, so profiles run under the same confs
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.contains("="))
-      .foreach { kv => val Array(k, v) = kv.split("=", 2); builder.config(k, v) })
-    val spark = builder.getOrCreate()
+    val spark = Sessions.builder(Sessions.envCores).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     final case class J(id: Int, desc: String, start: Long,

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Dumps `.explain("formatted")` for named queries to one file each —
@@ -16,15 +15,7 @@ object PlanDump {
     val suffix = args(1)
     val names = args(2).split(",").map(_.trim).filter(_.nonEmpty)
     val sfDir = if (args.length > 3) args(3) else "/root/testdata/sf0.1"
-    val builder = SparkSession.builder().master("local[4]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // the Bench's ad-hoc conf hook, so dumps run under the same confs
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.contains("="))
-      .foreach { kv => val Array(k, v) = kv.split("=", 2); builder.config(k, v) })
-    val spark = builder.getOrCreate()
+    val spark = Sessions.builder(4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>

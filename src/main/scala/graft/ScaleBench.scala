@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 
@@ -23,14 +23,7 @@ object ScaleBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val factor = sys.env.getOrElse("SPARK_GRAFT_SCALE", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.builder(Sessions.envCores).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val out = java.nio.file.Files.createTempDirectory("graft-scale").toString

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. An optional
@@ -10,19 +9,10 @@ object Verify {
     val Array(sfDir, outDir, rest @ _*) = args
     val only: Option[Set[String]] =
       rest.headOption.map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // the Bench's ad-hoc conf hook — lets the oracle gate exercise a
-    // non-default conf arm (e.g. scanFanOut=true), so a user-flippable
-    // flag's correctness claims are gate-verified, not just asserted
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.contains("="))
-      .foreach { kv => val Array(k, v) = kv.split("=", 2); builder.config(k, v) })
-    val spark = builder.getOrCreate()
+    // Sessions' SPARK_GRAFT_CONF hook lets the oracle gate run under a
+    // non-default Spark conf (e.g. spark.sql.adaptive.enabled=false), so
+    // a conf-dependent plan's correctness is gate-verified, not asserted
+    val spark = Sessions.builder(Sessions.envCores).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // queries are independent — run 4 at a time on the shared session

@@ -204,6 +204,12 @@ object LlmOps {
   val GateBroadcastMaxRows: Long    = 4000000L
   val GateBroadcastMaxVecRows: Long = 262144L
 
+  /** `df` hinted for broadcast iff its collected row bound is within
+    * [[GateBroadcastMaxRows]]; over it AQE decides from runtime stats.
+    */
+  private def gateBroadcast(df: DataFrame, bound: Long): DataFrame =
+    if (bound <= GateBroadcastMaxRows) broadcast(df) else df
+
   /** Resolved-relation memo for STORED-ARTIFACT probe reads.
     * `spark.read.parquet` on a partitioned artifact re-lists every
     * partition directory, re-infers partition columns and re-reads a
@@ -214,46 +220,66 @@ object LlmOps {
     * llm_fluency_lang's wall in driver gaps. This memo reuses the
     * RESOLVED relation (metadata only — scans still read the parquet
     * bytes every execution; no rows are ever cached) per (session, path,
-    * artifact fingerprint), the [[graft.Tables]] relCache pattern
-    * applied to the stored artifacts. The fingerprint is the
-    * [[graft.llm.LlmQueries]] memo discipline — every file's
-    * path+size+mtime, ~one stat() per file, orders cheaper than
-    * re-resolution — so an append, a compaction, or an atomic swap mints
-    * a new key and a stale relation is never served (probes of MUTATING
-    * paths stay safe); lifecycle reads that must observe in-flight
-    * writes (the delta apply's corpus replay, prune maintenance) stay on
-    * bare `read.parquet` by design. Weak session key: a stopped
-    * session's relations unpin with it. Conf-gated for A/B
-    * (spark.graft.storedRelCache, default on).
+    * artifact listing), the [[graft.Tables]] relCache pattern applied
+    * to the stored artifacts. The listing is every file's
+    * path+size+mtime under `path`, read through the Hadoop FileSystem
+    * (so `file://` and other URIs list the same files the scan will
+    * read), ~one stat() per file, orders cheaper than re-resolution; its
+    * SHA-256 digest is kept with the relation, so an append, a
+    * compaction, or an atomic swap changes the digest and a stale
+    * relation is never served (probes of MUTATING paths stay safe). One
+    * entry per path: a changed digest replaces the old relation, so a
+    * long-running ingest loop's appends do not grow the memo. Lifecycle
+    * reads that must observe in-flight writes (the delta apply's corpus
+    * replay, prune maintenance) stay on bare `read.parquet` by design.
+    * Weak session key: a stopped session's relations unpin with it.
     */
   private val storedRelCache = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, DataFrame]]())
+      java.util.concurrent.ConcurrentHashMap[String, (String, DataFrame)]]())
 
   private[llm] def readStored(spark: SparkSession, path: String): DataFrame = {
-    if (!spark.conf.get("spark.graft.storedRelCache", "true").toBoolean)
-      return spark.read.parquet(path)
     val perSession = storedRelCache.synchronized {
       var m = storedRelCache.get(spark)
       if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+        m = new java.util.concurrent.ConcurrentHashMap[String, (String, DataFrame)]()
         storedRelCache.put(spark, m)
       }
       m
     }
-    def ls(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty[java.io.File])
-          .toSeq.sortBy(_.getName).flatMap(ls)
-      else Seq(f)
-    val fp = ls(new java.io.File(path))
-      .map(f => s"${f.getPath}:${f.length}:${f.lastModified}")
-      .mkString("|").hashCode
-    perSession.computeIfAbsent(s"$path|$fp", _ => spark.read.parquet(path))
+    val digest = listingDigest(spark, path)
+    perSession.compute(path, (_, cur) =>
+      if (cur != null && cur._1 == digest) cur
+      else (digest, spark.read.parquet(path)))._2
+  }
+
+  /** Memo entries held for `spark` — one per distinct stored path. */
+  private[llm] def storedRelEntries(spark: SparkSession): Int =
+    Option(storedRelCache.get(spark)).map(_.size).getOrElse(0)
+
+  /** SHA-256 of the sorted (path, length, mtime) listing of every file
+    * under `path`; a missing path digests as empty (the read then fails
+    * as a bare `read.parquet` would).
+    */
+  private def listingDigest(spark: SparkSession, path: String): String = {
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    def files(st: FileStatus): Seq[FileStatus] =
+      if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(files)
+      else Seq(st)
+    val listing =
+      if (!fs.exists(root)) Nil
+      else files(fs.getFileStatus(root))
+        .map(st => s"${st.getPath}:${st.getLen}:${st.getModificationTime}")
+        .sorted
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    listing.foreach(l => md.update((l + "\n").getBytes("UTF-8")))
+    md.digest().map(b => f"${b & 0xff}%02x").mkString
   }
 
   /** Stage-frame pin for the BATCH FUNNEL family: a LAZY checkpoint
-    * (default) instead of `persist`. Same storage level, same
+    * instead of `persist`. Same storage level, same
     * materialize-on-first-action behavior, row-identical output — but
     * the pinned frame's logical plan becomes a truncated LEAF, so every
     * downstream consumer plan (and every AQE re-optimization round,
@@ -281,21 +307,14 @@ object LlmOps {
     * The nightly DELTA chain deliberately stays on `persist`: its
     * [[curateDeltaReport]] contract releases each pinned frame
     * explicitly (`unpersist`), which checkpoints cannot honor.
-    * `spark.graft.funnelLineageTruncate=false` restores persist — the
-    * A/B hook.
     */
-  private def stagePin(spark: SparkSession,
-      lvl: org.apache.spark.storage.StorageLevel): DataFrame => DataFrame = {
-    val truncate = spark.conf
-      .get("spark.graft.funnelLineageTruncate", "true").toBoolean
-    if (!truncate) df => df.persist(lvl)
-    else spark.conf.getOption("spark.graft.cc.checkpointDir") match {
+  private def stagePin(spark: SparkSession): DataFrame => DataFrame =
+    spark.conf.getOption("spark.graft.cc.checkpointDir") match {
       case Some(dir) =>
         spark.sparkContext.setCheckpointDir(dir)
         df => df.checkpoint(eager = false)
       case None => df => df.localCheckpoint(eager = false)
     }
-  }
 
   /** Max distinct partition values a stored probe pins as a STATIC
     * `IN (...)` literal on the index scan. The static pin is the
@@ -453,8 +472,7 @@ object LlmOps {
     // (fresh-bench A/B: 1.41/1.66 vs 1.35/1.32 s — task overhead across
     // its many tiny stages outweighs the wide signature pass).
     val hashed0 = signaturesOf(
-      if (widen) widenCorpus(corpus, idCol, "spark.graft.dedupScanFanOut")
-      else corpus,
+      if (widen) widenCorpus(corpus, idCol) else corpus,
       idCol, textCol)
     val hashed = if (persistHashed)
       hashed0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -530,7 +548,7 @@ object LlmOps {
     // (The signature table itself stays unpersisted: unlike dedupMinHash,
     // nothing downstream re-reads the per-doc shingle hashes.)
     //
-    // WIDEN-ONLY fan-out before the pin (default on): when the scan
+    // WIDEN-ONLY fan-out before the pin ([[widenCorpus]]): when the scan
     // plans NARROWER than the session's cores (the single-row-group
     // harness layout — guide §2.5's unsplittable-input case), every
     // downstream consumer of the cache (the shingle/minhash derivation
@@ -544,13 +562,7 @@ object LlmOps {
     // (session-level scanFanOut probe, same mechanism): 6/6 wins,
     // 1.617 → 1.076 s. At production widths partitions ≥ cores, the
     // condition is false and this is a no-op — never a coalesce.
-    val txt0 = textCorpus(corpus, idCol, textCol)
-    val fanP = corpus.sparkSession.sparkContext.defaultParallelism
-    val txt = (if (corpus.sparkSession.conf
-          .get("spark.graft.dedupEditFanOut", "true").toBoolean &&
-          txt0.rdd.getNumPartitions < fanP)
-        txt0.repartition(fanP, col("doc_id"))
-      else txt0)
+    val txt = widenCorpus(textCorpus(corpus, idCol, textCol), "doc_id")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val (_, pairs) = minHashCandidates(txt, "doc_id", "text",
       persistHashed = false)
@@ -748,12 +760,7 @@ object LlmOps {
     // from coalescing and restores cores-wide parallelism for the
     // array_intersect/array_union verify (JobProfile: a 0.86 s wall /
     // 1.45 s CPU 2-task stage at sf0.1 — the query's single largest).
-    // Conf is the A/B hook (default on).
-    val pairsW = if (corpus.sparkSession.conf
-        .get("spark.graft.ngramVerifyFanOut", "true").toBoolean)
-      pairs.repartition(corpus.sparkSession.sparkContext.defaultParallelism)
-    else pairs
-    pairsW
+    pairs.repartition(corpus.sparkSession.sparkContext.defaultParallelism)
       .join(g.as("a"), col("id_a") === col("a.doc_id"))
       .join(g.as("b"), col("id_b") === col("b.doc_id"))
       .select(col("id_a"), col("id_b"),
@@ -3317,24 +3324,17 @@ object LlmOps {
     * composition (the recursive-CC CTE dominates DuckDB's side).
     */
   /** The funnel's shared stage derivation: (raw corpus, quality-keeper
-    * ids [persisted iff `persistQIds`], stage-2 survivor corpus
-    * [persisted]). The persists back the returned lazy frames, so they
-    * live until the caller's post-materialization `clearCache` (the
-    * Bench rep discipline) — bounded: ids and stage-2 survivors only.
+    * ids, stage-2 survivor corpus [pinned]). The pins back the returned
+    * lazy frames, so they live until the caller's post-materialization
+    * `clearCache` (the Bench rep discipline) — bounded: ids, hashes and
+    * stage-2 survivors only.
     */
   private def funnelStages(raw: DataFrame, idCol: String,
-      textCol: String, persistQIds: Boolean): (DataFrame, DataFrame, DataFrame) = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val pinStage = stagePin(raw.sparkSession, lvl)
+      textCol: String): (DataFrame, DataFrame, DataFrame) = {
+    val pinStage = stagePin(raw.sparkSession)
     val corpus = textCorpus(raw, idCol, textCol)
-    // ids only, persisted for the FUNNEL caller: the quality projections
-    // (trigram transform + regexp counts, the funnel's priciest narrow
-    // work) run ONCE even though the survivor set feeds two branches
-    // there (its own stage count and the stage-2 semi join); quality ids
-    // ⊆ corpus ids, so counting the id frame IS the stage-1 survivor
-    // count — no join needed. The APPLY caller consumes qIds exactly
-    // once (the semi join), so it skips the persist — a cache with one
-    // reader is pure block-manager leak.
+    // quality ids ⊆ corpus ids, so counting the id frame IS the stage-1
+    // survivor count — no join needed.
     // ONE corpus pass derives BOTH stage-1/2 decisions (§2.4 remove
     // passes): the quality flags and the exact-dedup content hash are
     // independent per-row projections of the same rows, so fusing them
@@ -3343,32 +3343,17 @@ object LlmOps {
     // qIds becomes a filter of the pin, keepers a groupBy of it. The
     // pin is ids + 32-byte hashes + one flag — text never cached, the
     // standing pin discipline — and it always has ≥2 readers (both
-    // stage-2 semi joins; the FUNNEL read-out adds a third), so the
-    // persistQIds single-reader exemption no longer applies. The conf
-    // is the A/B hook; false restores the two-pass shape.
-    if (raw.sparkSession.conf
-        .get("spark.graft.funnelFusedGatePass", "true").toBoolean) {
-      val qk = pinStage(TextAnalysis.qualityFlags(corpus)
-        .select(col("doc_id"), md5(col("text")).as("content_hash"),
-          col("keep")))
-      val qIds = qk.filter(col("keep")).select("doc_id")
-      val keepers = qk.groupBy("content_hash")
-        .agg(min(col("doc_id")).as("doc_id")).select("doc_id")
-      val eCorpus = corpus.join(qIds, Seq("doc_id"), "left_semi")
-        .join(keepers, Seq("doc_id"), "left_semi")
-        .transform(pinStage)
-      (corpus, qIds, eCorpus)
-    } else {
-      val qIds0 = TextAnalysis.qualityFilter(corpus)
-        .filter(col("keep")).select("doc_id")
-      val qIds = if (persistQIds) pinStage(qIds0) else qIds0
-      val keepers = corpus.groupBy(md5(col("text")).as("content_hash"))
-        .agg(min(col("doc_id")).as("doc_id")).select("doc_id")
-      val eCorpus = corpus.join(qIds, Seq("doc_id"), "left_semi")
-        .join(keepers, Seq("doc_id"), "left_semi")
-        .transform(pinStage)
-      (corpus, qIds, eCorpus)
-    }
+    // stage-2 semi joins; the FUNNEL read-out adds a third).
+    val qk = pinStage(TextAnalysis.qualityFlags(corpus)
+      .select(col("doc_id"), md5(col("text")).as("content_hash"),
+        col("keep")))
+    val qIds = qk.filter(col("keep")).select("doc_id")
+    val keepers = qk.groupBy("content_hash")
+      .agg(min(col("doc_id")).as("doc_id")).select("doc_id")
+    val eCorpus = corpus.join(qIds, Seq("doc_id"), "left_semi")
+      .join(keepers, Seq("doc_id"), "left_semi")
+      .transform(pinStage)
+    (corpus, qIds, eCorpus)
   }
 
   /** One-pass stage read-out for a funnel whose survivor sets form a
@@ -3403,8 +3388,7 @@ object LlmOps {
 
   def curationFunnel(corpus: DataFrame, idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
-    val (raw, qIds, eCorpus) = funnelStages(corpus, idCol, textCol,
-      persistQIds = true)
+    val (raw, qIds, eCorpus) = funnelStages(corpus, idCol, textCol)
     val kept = dedupApply(eCorpus, dedupMinHash(eCorpus))
     stageCountsOnePass(("0_raw", raw), Seq(
       "1_quality" -> qIds, "2_exact_dedup" -> eCorpus,
@@ -3420,8 +3404,7 @@ object LlmOps {
     */
   def curationApply(corpus: DataFrame, idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
-    val (_, _, eCorpus) = funnelStages(corpus, idCol, textCol,
-      persistQIds = false)
+    val (_, _, eCorpus) = funnelStages(corpus, idCol, textCol)
     dedupApply(eCorpus, dedupMinHash(eCorpus))
       .select(col("doc_id"), length(col("text")).cast("bigint").as("n_chars"))
   }
@@ -3445,11 +3428,9 @@ object LlmOps {
   def curationFunnelLm(corpus: DataFrame, lmDir: String,
       threshold: Double = 0.0333, idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
-    val (raw, qIds, eCorpus) = funnelStages(corpus, idCol, textCol,
-      persistQIds = true)
+    val (raw, qIds, eCorpus) = funnelStages(corpus, idCol, textCol)
     val kept = dedupApply(eCorpus, dedupMinHash(eCorpus))
-      .transform(stagePin(corpus.sparkSession,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      .transform(stagePin(corpus.sparkSession))
     val fluent = fluencyStored(kept, lmDir)
       .filter(col("fluency") >= threshold).select("doc_id")
     stageCountsOnePass(("0_raw", raw), Seq(
@@ -3491,8 +3472,7 @@ object LlmOps {
       qualityModelDir: Option[String] = None, qualityTau: Double = 1.0)
       : (DataFrame, DataFrame, Option[DataFrame], DataFrame, DataFrame,
          DataFrame, DataFrame) = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val pinStage = stagePin(corpus.sparkSession, lvl)
+    val pinStage = stagePin(corpus.sparkSession)
     // with the PER-LANGUAGE bar on, the corpus carries its language
     // label through the chain (the deltaGates convention): the stage-5
     // scorer and its (lang, wb) footprint need it, every earlier gate
@@ -3506,21 +3486,11 @@ object LlmOps {
     // content hash (the [[funnelStages]] fused-gate-pass rationale: two
     // independent per-row projections of the same rows fuse into one
     // pinned (doc_id, content_hash, keep) frame — ids+hashes only, text
-    // never cached — removing the md5 groupBy's own corpus scan). The
-    // same conf is the A/B hook.
-    val fusedGate = corpus.sparkSession.conf
-      .get("spark.graft.funnelFusedGatePass", "true").toBoolean
-    val qk =
-      if (fusedGate) Some(pinStage(
-        TextAnalysis.qualityFlags(corpus, idCol, textCol)
-          .select(col("doc_id"), md5(col("text")).as("content_hash"),
-            col("keep"))))
-      else None
-    val qIds = qk match {
-      case Some(f) => f.filter(col("keep")).select("doc_id")
-      case None => TextAnalysis.qualityFilter(corpus, idCol, textCol)
-        .filter(col("keep")).select("doc_id").transform(pinStage)
-    }
+    // never cached — removing the md5 groupBy's own corpus scan).
+    val qk = pinStage(TextAnalysis.qualityFlags(corpus, idCol, textCol)
+      .select(col("doc_id"), md5(col("text")).as("content_hash"),
+        col("keep")))
+    val qIds = qk.filter(col("keep")).select("doc_id")
     // the TRAINED-classifier gate rides with the stateless leaders
     // (three-surface parity: the live loop's qualityModelDir option,
     // now on the batch funnel too): the corpus scores against the
@@ -3555,12 +3525,8 @@ object LlmOps {
     val clean = decontaminateStoredFrom(sig, decontamDir)
       .filter(col("n_shared") <= maxSharedGrams)
       .select("doc_id").transform(pinStage)
-    val keepers = qk match {
-      case Some(f) => f.groupBy("content_hash")
-        .agg(min(col("doc_id")).as("doc_id")).select("doc_id")
-      case None => raw.groupBy(md5(col("text")).as("content_hash"))
-        .agg(min(col("doc_id")).as("doc_id")).select("doc_id")
-    }
+    val keepers = qk.groupBy("content_hash")
+      .agg(min(col("doc_id")).as("doc_id")).select("doc_id")
     val eIds = clean.join(keepers, Seq("doc_id"), "left_semi").transform(pinStage)
     val eSig = sig.join(eIds, Seq("doc_id"), "left_semi")
     val bands = bandsOf(eSig).transform(pinStage)
@@ -3957,22 +3923,11 @@ object LlmOps {
     // subtree into every branch with no exchange reuse — at sf0.1 the
     // delta cache build re-planned the fingerprint pass 3× behind 6
     // extra exchanges; at 100 TB that is two redundant fingerprint
-    // passes over the new snapshot. Conf-gated for A/B (default on).
-    val oneJoin = newC.sparkSession.conf
-      .get("spark.graft.deltaOneJoinDiff", "true").toBoolean
-    val delta = pin(
-      if (oneJoin)
-        newC.withColumn("nh", md5(col("text")))
-          .join(oldFp, Seq("doc_id"), "left_outer")
-          .filter(col("oh").isNull || col("oh") =!= col("nh"))
-          .select(newC.columns.map(col): _*)
-      else {
-        val deltaIds = newC.select(col("doc_id"), md5(col("text")).as("nh"))
-          .join(oldFp, Seq("doc_id"), "left_outer")
-          .filter(col("oh").isNull || col("oh") =!= col("nh"))
-          .select("doc_id")
-        newC.join(deltaIds, Seq("doc_id"), "left_semi")
-      })
+    // passes over the new snapshot.
+    val delta = pin(newC.withColumn("nh", md5(col("text")))
+      .join(oldFp, Seq("doc_id"), "left_outer")
+      .filter(col("oh").isNull || col("oh") =!= col("nh"))
+      .select(newC.columns.map(col): _*))
     // persisted when the decontam gate is on: the id frame then has three
     // consumers (its stage count, the gram-gate input, the clean-id
     // anti-join) and an un-cached qualityFilter chain re-derives per use.
@@ -4099,13 +4054,8 @@ object LlmOps {
     // Exchange + two Sort + 2-3 extra AQE query stages of pure driver
     // orchestration — the measured per-stage tax on this family); over
     // the bound the hint drops and AQE decides from runtime stats, the
-    // standard degradation. Conf-gated for A/B (default on; the flag is
-    // the measurement hook, not a tuning knob — the gate itself is
-    // scale-adaptive through the collected counts).
-    val bcGate = delta.sparkSession.conf
-      .get("spark.graft.deltaGateBroadcast", "true").toBoolean
-    def bc(df: DataFrame, bound: Long): DataFrame =
-      if (bcGate && bound <= GateBroadcastMaxRows) broadcast(df) else df
+    // standard degradation ([[gateBroadcast]] — scale-adaptive through
+    // the collected counts).
     // kept is persisted: the stage read-out, the LM intersect, and the
     // apply's survivor set all consume it — an id-only frame, never
     // corpus-sized
@@ -4126,20 +4076,23 @@ object LlmOps {
       case _ => None
     }
     val survivorIds0 = fluentIds match {
-      case Some(fl) => kept.join(bc(fl, ecCount), Seq("doc_id"), "left_semi")
+      case Some(fl) =>
+        kept.join(gateBroadcast(fl, ecCount), Seq("doc_id"), "left_semi")
       case None     => kept
     }
     val survivorIds1 = cleanIds match {
       case Some(ci) =>
-        survivorIds0.join(bc(ci, cleanCount.get), Seq("doc_id"), "left_semi")
+        survivorIds0.join(gateBroadcast(ci, cleanCount.get), Seq("doc_id"),
+          "left_semi")
       case None     => survivorIds0
     }
     val survivorIds = clfIds match {
       case Some(ci) =>
-        survivorIds1.join(bc(ci, deltaCount), Seq("doc_id"), "left_semi")
+        survivorIds1.join(gateBroadcast(ci, deltaCount), Seq("doc_id"), "left_semi")
       case None     => survivorIds1
     }
-    val survivors = eC.join(bc(survivorIds, ecCount), Seq("doc_id"), "left_semi")
+    val survivors =
+      eC.join(gateBroadcast(survivorIds, ecCount), Seq("doc_id"), "left_semi")
     DeltaGates(delta, deltaCount, qIds, qCount, clfIds, clfCount,
       cleanIds, cleanCount, ecCount, dcClfCount, eC, kept, fluentIds,
       bSig, bBands, survivors)
@@ -4162,20 +4115,17 @@ object LlmOps {
     // the decontam and trained-classifier filters apply as id
     // intersections on every later stage's read-out (per-doc gates
     // commute — counts are identical to the nested form, see deltaGates).
-    // Same size-gated broadcast as the survivor chain (deltaGates' bc):
-    // every bound is a collected literal, so the hint costs no job.
-    val bcGate = g.delta.sparkSession.conf
-      .get("spark.graft.deltaGateBroadcast", "true").toBoolean
-    def bc(df: DataFrame, bound: Long): DataFrame =
-      if (bcGate && bound <= GateBroadcastMaxRows) broadcast(df) else df
+    // Same size-gated broadcast as the survivor chain: every bound is a
+    // collected literal, so the hint costs no job.
     def clean(df: DataFrame): DataFrame = {
       val c = g.cleanIds match {
         case Some(ci) =>
-          df.join(bc(ci, g.cleanCount.get), Seq("doc_id"), "left_semi")
+          df.join(gateBroadcast(ci, g.cleanCount.get), Seq("doc_id"), "left_semi")
         case None     => df
       }
       g.clfIds match {
-        case Some(ci) => c.join(bc(ci, g.deltaCount), Seq("doc_id"), "left_semi")
+        case Some(ci) =>
+          c.join(gateBroadcast(ci, g.deltaCount), Seq("doc_id"), "left_semi")
         case None     => c
       }
     }
@@ -4214,7 +4164,8 @@ object LlmOps {
       case Some(fl) =>
         base.unionByName(
           clean(g.kept)
-            .join(bc(fl.select(col("doc_id"), lit(1).as("fl_hit")), g.ecCount),
+            .join(gateBroadcast(
+                fl.select(col("doc_id"), lit(1).as("fl_hit")), g.ecCount),
               Seq("doc_id"), "left")
             .agg(count(lit(1)).as("n_near"), count(col("fl_hit")).as("n_fluent"))
             .select(explode(array(
@@ -4760,13 +4711,9 @@ object LlmOps {
     // duplicates. `dup` ⊆ distinct batch ids, so the band-row count that
     // gated the probe hints bounds it too — under the gate the anti join
     // is a BroadcastHashJoin (the SMJ here was two Exchange + two Sort
-    // over batch-sized frames, pure stage tax on the nightly); the same
-    // conf flag as the delta read-out arms the A/B.
-    val bcTail = spark.conf
-      .get("spark.graft.deltaGateBroadcast", "true").toBoolean
+    // over batch-sized frames, pure stage tax on the nightly).
     bSig.select("doc_id")
-      .join(if (bcTail) hinted(dup) else dup,
-        col("doc_id") === col("batch_id"), "left_anti")
+      .join(hinted(dup), col("doc_id") === col("batch_id"), "left_anti")
       .select("doc_id")
   }
 
@@ -5455,8 +5402,7 @@ object LlmOps {
     // widen-only fan-out ([[widenCorpus]]): hashing every sliding
     // window is the spans family's dominant per-row cost and fuses into
     // the 1-2-wide harness scan; no-op at production widths
-    widenCorpus(textCorpus(corpus, idCol, textCol), "doc_id",
-        "spark.graft.dedupScanFanOut")
+    widenCorpus(textCorpus(corpus, idCol, textCol), "doc_id")
       .withColumn("toks", split(col("text"), " "))
       .select(col("doc_id"), posexplode(expr(
         s"transform(sequence(1, greatest(size(toks)-${window - 1}, 1)), " +
@@ -5711,16 +5657,11 @@ object LlmOps {
     * production bytes AQE already keeps the exchange wide, this pins
     * the same width when the bytes are small. Output rows are identical
     * — every consumer is either a key-clustered aggregate or a join or
-    * window whose result never reads partition placement. The per-site
-    * confs (default on) are the A/B hooks.
+    * window whose result never reads partition placement.
     */
-  private def pinWideExchange(df: DataFrame, flag: String,
-      keys: String*): DataFrame = {
-    val spark = df.sparkSession
-    if (!spark.conf.get(flag, "true").toBoolean) df
-    else df.repartition(spark.sessionState.conf.numShufflePartitions,
+  private def pinWideExchange(df: DataFrame, keys: String*): DataFrame =
+    df.repartition(df.sparkSession.sessionState.conf.numShufflePartitions,
       keys.map(col): _*)
-  }
 
   /** WIDEN-ONLY corpus fan-out for the ANN family's per-row passes (the
     * [[dedupEdit]] rule, guide §2.5): when the corpus projection plans
@@ -5733,18 +5674,14 @@ object LlmOps {
     * execution, and hash(vec_id) additionally satisfies the
     * key-clustered aggregates downstream (pqAssign's argmin groupBy).
     * At production widths partitions ≥ cores, the condition is false
-    * and this is a no-op — never a coalesce. Conf (default on) is the
-    * A/B hook; measured under the driver's fresh-session methodology
-    * (see OPTIMIZATION_r19.md) jointly with [[pinWideExchange]]:
-    * the 13-query ANN family 12.0-15.3 s → 6.8-9.1 s.
+    * and this is a no-op — never a coalesce. Measured with the
+    * fresh-session bench (see OPTIMIZATION_r19.md) jointly with
+    * [[pinWideExchange]]: the 13-query ANN family 12.0-15.3 s →
+    * 6.8-9.1 s.
     */
-  private def widenCorpus(df: DataFrame, key: String = "vec_id",
-      flag: String = "spark.graft.annCorpusFanOut"): DataFrame = {
-    val spark = df.sparkSession
-    val fanP = spark.sparkContext.defaultParallelism
-    if (spark.conf.get(flag, "true").toBoolean &&
-        df.rdd.getNumPartitions < fanP)
-      df.repartition(fanP, col(key))
+  private def widenCorpus(df: DataFrame, key: String = "vec_id"): DataFrame = {
+    val fanP = df.sparkSession.sparkContext.defaultParallelism
+    if (df.rdd.getNumPartitions < fanP) df.repartition(fanP, col(key))
     else df
   }
 
@@ -6164,7 +6101,7 @@ object LlmOps {
     // on AQE's single coalesced partition (measured: the fused
     // reconstruct+score+rank stage was 0.96 s CPU on 1 task — half of
     // llm_ann_recall_pq_lloyd).
-    pinWideExchange(codes, "spark.graft.pqRankFanOut", "vec_id")
+    pinWideExchange(codes, "vec_id")
       .join(broadcast(pivots), Seq("cid"))
       .withColumn("cseg", expr(s"slice(ce, s*$sub+1, $sub)"))
       .groupBy("vec_id")
@@ -6183,8 +6120,7 @@ object LlmOps {
     // hash(vec_id) alone satisfies the (vec_id, label) clustering
     pinWideExchange(
       packed.select(col("vec_id"), col("label"),
-        posexplode(col("codes")).as(Seq("s", "cid"))),
-      "spark.graft.pqRankFanOut", "vec_id")
+        posexplode(col("codes")).as(Seq("s", "cid"))), "vec_id")
       .join(broadcast(pivots), Seq("cid"))
       .withColumn("cseg", expr(s"slice(ce, s*$sub+1, $sub)"))
       .groupBy("vec_id", "label")

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** Contract of the stored-artifact resolved-relation memo
   * ([[LlmOps.readStored]]): the resolution is reused while the artifact
   * is byte-identical, and ANY file-level change (append, rewrite,
-  * atomic swap) mints a new key — a probe can never be served a stale
+  * atomic swap) changes its listing digest — a probe can never be served a stale
   * relation that misses rows a maintenance write added. The memo is
   * metadata-only: scans re-read the parquet bytes every execution, so
   * rows are asserted, not plan identity.
@@ -40,17 +40,21 @@ class StoredRelCacheSpec extends SparkSpec {
       .deleteDirectory(new java.io.File(dir))
   }
 
-  test("conf off bypasses the memo (the A/B arm)") {
+  test("a file:// artifact sees its append; the memo keeps one entry per path") {
     val dir = java.nio.file.Files.createTempDirectory("graft-relcache2").toString
+    val uri = new java.io.File(s"$dir/t").toURI.toString
     try {
-      Seq((1L, "a")).toDF("id", "v")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/t")
-      spark.conf.set("spark.graft.storedRelCache", "false")
-      try {
-        val r1 = LlmOps.readStored(spark, s"$dir/t")
-        val r2 = LlmOps.readStored(spark, s"$dir/t")
-        assert(!(r1 eq r2), "conf off must resolve fresh every call")
-      } finally spark.conf.unset("spark.graft.storedRelCache")
+      Seq((1L, "a"), (2L, "b")).toDF("id", "v")
+        .coalesce(1).write.mode("overwrite").parquet(uri)
+      assert(uri.startsWith("file:"))
+      assert(LlmOps.readStored(spark, uri).count() === 2L)
+      val entries = LlmOps.storedRelEntries(spark)
+      Seq((3L, "c")).toDF("id", "v")
+        .coalesce(1).write.mode("append").parquet(uri)
+      assert(LlmOps.readStored(spark, uri).count() === 3L,
+        "a URI path must be listed like the scan lists it, or the append is missed")
+      assert(LlmOps.storedRelEntries(spark) === entries,
+        "a changed listing must replace the path's entry, not add one")
     } finally org.apache.commons.io.FileUtils
       .deleteDirectory(new java.io.File(dir))
   }
